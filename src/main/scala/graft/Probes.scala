@@ -1,12 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.concurrent.ConcurrentLinkedQueue
 
-/** Targeted measurement probes — the apparatus behind PLANS.md's skew
-  * and phase-attribution tables. Each subcommand builds its own session
-  * (fresh-JVM isolation is the caller's job, as with `Bench`) and
-  * prints ONE JSON line.
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftglue.BusGlue
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Targeted measurement probes — the apparatus behind PLANS.md's skew,
+  * scale and attribution tables. Each subcommand builds its own session
+  * (fresh-JVM isolation is the caller's job, as with `Bench`) and prints
+  * JSON lines (`plan` prints plans).
+  *
+  * `stages <query> <sfDir>` is the one per-operator breakdown: every
+  * stage is charged to the [[core.Trace]] scope of its job. `plan <sfDir>
+  * [query…]` prints the formatted explain of every plan a query executed.
+  * `skew`, `streamfloor`, `decade`, `width`, `refile` and `scanaudit`
+  * measure what a scope cannot express: treatments, scale and width
+  * pairs, stream lifecycle floors, and plan fan-out.
   *
   * `skew <sfDir> <plain|aqe|salted> [saltFactor]` — the same
   * lineitem⋈supplier revenue aggregation under three treatments of a
@@ -22,13 +38,6 @@ import org.apache.spark.sql.functions._
   * scale the defaults engage on their own). Every variant prints the
   * same result checksum — a treatment that changed the answer would be
   * a bug, not a tuning.
-  *
-  * `q152 <sfDir>` — phase attribution for the variant-shred query
-  * (to_json → parse_json → variant_get×4 → groupBy): times cumulative
-  * prefixes of the pipeline and reports per-phase deltas, the q29-style
-  * table that explains a decade ratio instead of guessing at it. Each
-  * prefix consumes its columns through an aggregate (column pruning
-  * would otherwise skip the work being measured).
   */
 object Probes {
 
@@ -65,51 +74,79 @@ object Probes {
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
+  private def benchRuns(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(default)
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def runQuery(spark: SparkSession, name: String, sfDir: String): Unit =
+    noop(SparkEntry.queries(name)(spark, sfDir))
+
+  /** Drop every cache a run left behind (the graft registry's strong
+    * refs included), so the next run recomputes its whole pipeline. */
+  private def clear(spark: SparkSession): Unit = {
+    core.InternalCaches.release()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  /** Block until the async listener bus has delivered every queued event
+    * to every listener — exact, where a sleep or a "count stopped
+    * changing" poll can drop the tail on a loaded host. */
+  private def drainBus(spark: SparkSession): Unit =
+    BusGlue.waitUntilEmpty(spark.sparkContext, 60000)
+
+  /** Run `body`; return every query execution it completed, in order.
+    * Eagerly checkpointed operators fire several per query, and the plan
+    * that matters (say, a join whose strategy flips across scales) is
+    * rarely the final one. */
+  private def executions(spark: SparkSession)(body: => Unit): Seq[QueryExecution] = {
+    val qes = new ConcurrentLinkedQueue[QueryExecution]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; drainBus(spark) }
+    finally spark.listenerManager.unregister(l)
+    qes.asScala.toSeq
+  }
+
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("skew") => skew(args(1), args(2),
       args.lift(3).map(_.toInt).getOrElse(8))
-    case Some("q152") => q152Phases(args(1))
-    case Some("q76") => q76Phases(args(1), args.lift(2).getOrElse("all"))
-    case Some("q94") => q94Phases(args(1), args.lift(2).getOrElse("all"))
-    case Some("q94jvm") => q94JvmRounds(args(1), args.lift(2).map(_.toInt).getOrElse(5))
-    case Some("q181") => q181Phases(args(1), args.lift(2).getOrElse("all"))
-    case Some("q149") => q149Phases(args(1), args.lift(2).getOrElse("all"))
-    case Some("q176") => q176Phases(args(1), args.lift(2).getOrElse("all"))
     case Some("streamfloor") => streamFloor(args(1),
       args.lift(2).getOrElse("q186_stream_histogram_quantiles"))
     case Some("decade") => decadePairs(args(1), args(2), args(3),
       args.lift(4).map(_.toInt).getOrElse(3))
     case Some("width") => widthPairs(args(1), args(2), args(3).toInt,
       args(4).toInt, args.lift(5).map(_.toInt).getOrElse(3))
-    case Some("stages") => stagesOf(args(1), args(2))
+    case Some("stages") => stages(args(1), args(2))
+    case Some("q149") => q149Phases(args(1), args.lift(2).getOrElse("all"))
+    case Some("q181") => q181Phases(args(1), args.lift(2).getOrElse("all"))
     case Some("refile") => refile(args(1), args(2), args(3).toInt, args(4))
-    case Some("q66") => q66Phases(args.lift(1).map(_.toInt).getOrElse(64))
-    case Some("plan") => planOf(args(1), args(2))
+    case Some("plan") => plan(args(1), args.drop(2).toSeq)
     case Some("scanaudit") => scanAudit(args(1), args.lift(2).map(_.toInt).getOrElse(4))
     case _ =>
       System.err.println(
         "usage: Probes skew <sfDir> <plain|aqe|salted> [saltFactor] | " +
-          "q152 <sfDir> | q76 <sfDir> [all|pairs3|pairs2|full] | " +
-          "q94 <sfDir> [all|pairs|cc|full] | q94jvm <sfDir> [rounds] | " +
-          "q181 <sfDir> [all|memb|pairs|full] | " +
           "streamfloor <sfDir> [queryName] | " +
           "decade <dirA> <dirB> <queryName> [rounds] | " +
           "width <sfDir> <queryName> <w1> <w2> [rounds] | " +
           "stages <queryName> <sfDir> | " +
-          "refile <sfDir> <table> <n> <outDir> | q66 [nFiles] | " +
-          "plan <queryName> <sfDir> | scanaudit <sfDir> [flagScans]")
+          "q149 <sfDir> [all|pairs|cc|full] | q181 <sfDir> [all|memb|pairs|full] | " +
+          "refile <sfDir> <table> <n> <outDir> | " +
+          "plan <sfDir> [queryName...] | scanaudit <sfDir> [flagScans]")
       sys.exit(2)
   }
 
-  // SPARK_GRAFT_PROBE_WARMUP=0 skips the untimed warmup run inside a
-  // phase rung — the COLD-cache protocol: JIT/codegen warm on a scratch
-  // copy of the data via SPARK_GRAFT_WARMUP_SF_DIR semantics is not
-  // available inside a rung (the rung times ONE pipeline), so cold
-  // samples instead run warmup-free with RUNS=1 in a fresh JVM after an
-  // external page-cache evict (dev/evict_cache.py) — the first touch IS
-  // the measurement. Cold numbers therefore bundle JIT with I/O; the
-  // warm/cold DELTA isolates the page-cache term because the warm run
-  // pays the same JIT.
+  // SPARK_GRAFT_PROBE_WARMUP=0 skips the untimed warmup run — the
+  // COLD-cache protocol: cold samples run warmup-free with RUNS=1 in a
+  // fresh JVM after an external page-cache evict (dev/evict_cache.py),
+  // so the first touch IS the measurement. Cold numbers therefore bundle
+  // JIT with I/O; the warm/cold DELTA isolates the page-cache term
+  // because the warm run pays the same JIT.
   private def probeWarmup: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_PROBE_WARMUP", "1") != "0"
 
@@ -126,29 +163,12 @@ object Probes {
     * always prints, so "flagged":0 is itself recorded evidence. */
   private def scanAudit(sfDir: String, flagScans: Int): Unit = {
     val spark = session("graft-scanaudit", Map.empty)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit = plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = ()
-    })
     def count(s: String, pat: String): Int = pat.r.findAllIn(s).length
     var flagged = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val before = plans.size()
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        // listener bus is async: wait for the plan count to go stable
-        var stable = 0; var last = -1; var waited = 0
-        while (stable < 2 && waited < 10000) {
-          Thread.sleep(100); waited += 100
-          val sz = plans.size()
-          if (sz == last && sz > before) stable += 1 else stable = 0
-          last = sz
-        }
-        import scala.jdk.CollectionConverters._
-        val mine = plans.asScala.toSeq.drop(before)
+        val mine = executions(spark)(runQuery(spark, name, sfDir))
+          .map(_.executedPlan.toString)
         // the true fan-out signal is the SAME source path appearing many
         // times in ONE plan — N different tables scanned once each is a
         // normal join, and a persisted frame prints its child subtree
@@ -181,91 +201,30 @@ object Probes {
     spark.stop()
   }
 
-  /** Print the EXECUTED (final adaptive) physical plan of any SparkEntry
-    * query — `.explain` on the unexecuted frame shows the initial plan,
-    * which hides what AQE actually did (exchange reuse, coalesce, skew
-    * splits, runtime join demotions). Runs the query once against a noop
-    * sink, then prints the plan the run actually used. The plan-audit
-    * workflow: run this after touching any multi-consumer operator and
-    * look for ReusedExchange/ReusedSubquery nodes where a frame fans out
-    * to several joins. */
-  private def planOf(queryName: String, sfDir: String): Unit = {
-    val spark = session("graft-planprobe", Map.empty)
-    // collect EVERY executed plan, not just the last: checkpointed
-    // operators fire several actions per query, and the plan whose
-    // join strategy flips across scales (the q94 broadcast->shuffle
-    // regime boundary) is rarely the final one
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit = plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = ()
-    })
-    SparkEntry.queries(queryName)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    // listener bus is async AND a query fires several plans: wait for the
-    // COUNT to go stable, not merely non-empty — waiting for the first
-    // plan alone dropped the main probe plan of a 3-job query (round-11:
-    // q124's width witness had to fall back to the ScanWidth log line)
-    var stable = 0; var last = -1; var waited = 0
-    while (stable < 2 && waited < 10000) {
-      Thread.sleep(100); waited += 100
-      val sz = plans.size()
-      if (sz == last && sz > 0) stable += 1 else stable = 0
-      last = sz
+  /** Print the formatted explain of EVERY plan the named SparkEntry
+    * queries executed (all queries when none are named) — the final
+    * adaptive plans, which `.explain` on the unexecuted frame cannot show
+    * (exchange reuse, coalescing, skew splits, runtime join demotions).
+    * Each query runs once against a noop sink. The plan-audit workflow:
+    * after touching a multi-consumer operator, look for ReusedExchange /
+    * ReusedSubquery where a frame fans out to several joins, and for
+    * PushedFilters, pruned ReadSchema and broadcast small sides. */
+  private def plan(sfDir: String, names: Seq[String]): Unit = {
+    val spark = session("graft-plan", Map.empty)
+    val queries = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
+    queries.foreach { name =>
+      println(s"================ $name ================")
+      try {
+        val qes = executions(spark)(runQuery(spark, name, sfDir))
+        qes.zipWithIndex.foreach { case (qe, i) =>
+          println(s"==== executed plan ${i + 1}/${qes.size} ====")
+          println(qe.explainString(FormattedMode))
+        }
+      } catch {
+        case e: Exception => println(s"(failed: ${e.getClass.getSimpleName}: ${e.getMessage})")
+      }
+      clear(spark)
     }
-    import scala.jdk.CollectionConverters._
-    plans.asScala.zipWithIndex.foreach { case (p, i) =>
-      println(s"==== executed plan ${i + 1}/${plans.size} ====")
-      println(p)
-    }
-    spark.stop()
-  }
-
-  /** q66 attribution: is the 0.44–0.47 s bench cost per-FILE work or the
-    * FIXED overhead of the broadcast header-resolution design (grid parse
-    * job + metadata agg + localCheckpoint + schema collect + broadcast
-    * data pass)? Times the same multiSheetUnion at 2 files (the bench
-    * fixture set) and at `nFiles` (the 2 fixtures copied round-robin),
-    * plus a grid-parse-only rung at each count so the parse leg splits
-    * from the resolution legs. If the 2→N cost grows far slower than N/2,
-    * the sf0.1 number is the fixed job-structure cost — the price paid
-    * ONCE per query for a resolution path with nothing driver-side that
-    * scales in file count, which is the 100 TB trade the round-7 rework
-    * made deliberately. */
-  private def q66Phases(nFiles: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val spark = session("graft-q66probe", Map.empty)
-    val src = Paths.get("src/test/resources/fixtures/xlsx_many")
-    val base = Files.createTempDirectory("graft_q66probe")
-    val many = base.resolve("many"); Files.createDirectory(many)
-    val two = base.resolve("two"); Files.createDirectory(two)
-    val fixtures = Files.list(src).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.toString.endsWith(".xlsx")).sortBy(_.toString)
-    fixtures.foreach(f => Files.copy(f, two.resolve(f.getFileName),
-      StandardCopyOption.REPLACE_EXISTING))
-    (0 until nFiles).foreach { i =>
-      val f = fixtures(i % fixtures.length)
-      Files.copy(f, many.resolve(s"copy_$i.xlsx"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(5)
-    def gridOnly(dir: java.nio.file.Path): Unit =
-      sources.ExcelReader.sheetsGridTagged(spark, s"$dir/*.xlsx").count()
-    def full(dir: java.nio.file.Path): Unit =
-      sources.ExcelReader.multiSheetUnion(spark, s"$dir/*.xlsx")
-        .orderBy("source_file", "source_sheet", "row_idx")
-        .write.format("noop").mode("overwrite").save()
-    full(two) // warmup: codegen + classloading, untimed
-    val g2 = timed(runs)(gridOnly(two)); val f2 = timed(runs)(full(two))
-    val gN = timed(runs)(gridOnly(many)); val fN = timed(runs)(full(many))
-    def fmt(xs: Seq[Double]) = f"${median(xs)}%.3f"
-    println(s"""{"probe":"q66","n_files":$nFiles,"runs":$runs""" +
-      s""","grid_2":${fmt(g2)},"full_2":${fmt(f2)}""" +
-      s""","grid_n":${fmt(gN)},"full_n":${fmt(fN)}""" +
-      s""","resolution_2":${f"${median(f2) - median(g2)}%.3f"}""" +
-      s""","resolution_n":${f"${median(fN) - median(gN)}%.3f"}}""")
     spark.stop()
   }
 
@@ -326,27 +285,19 @@ object Probes {
         .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")), 2))
           .as("revenue"), count(lit(1)).as("n_items"))
     }
-    // capture the FINAL adaptive plan of each execution — "did AQE's
-    // skew split actually engage" is a claim the timing table can't
-    // settle by itself (an un-engaged mechanism and an engaged-but-
-    // useless one read identically as "no speedup")
-    @volatile var lastPlan = ""
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit = lastPlan = qe.executedPlan.toString
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = ()
-    })
     // untimed: hot-key diagnostics + warmup (page cache, codegen)
     val hot = operators.Skew.heavyHitters(li, "suppkey", 1).head()
     val hotShare = hot.getDouble(hot.length - 1)
     val check = joined.agg(sum(round(col("revenue"), 0)).cast("long"),
       sum("n_items").cast("long"), count(lit(1))).head()
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    val secs = timed(runs) { joined.write.format("noop").mode("overwrite").save() }
-    // listener events are async — poll (bounded) rather than fixed-sleep
-    val deadline = System.nanoTime() + 10000000000L
-    while (lastPlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    var secs = Seq.empty[Double]
+    // the FINAL adaptive plan of the last timed execution — "did AQE's
+    // skew split actually engage" is a claim the timing table can't
+    // settle by itself (an un-engaged mechanism and an engaged-but-
+    // useless one read identically as "no speedup")
+    val lastPlan = executions(spark) {
+      secs = timed(benchRuns(3))(noop(joined))
+    }.lastOption.map(_.executedPlan.toString).getOrElse("")
     // Spark 4 renders an engaged skew split as an AQEShuffleRead whose
     // partition spec is printed "skewed" (optionally with "coalesced"),
     // and the join node carries isSkewJoin=true. A bare "skew" match
@@ -367,325 +318,6 @@ object Probes {
     spark.stop()
   }
 
-  /** q76 decade attribution: q76 should cost ~ q29 (the pairs join on a
-    * slightly bigger corpus) + a small connected-components leg over the
-    * ~10^5 true-pair edges — but it measures far above q29 at sf10.
-    * Times (a) the pairs join alone on q76's three-way corpus,
-    * (b) the pairs join on q29's two-way corpus for reference,
-    * (c) full q76 — the (c)-(a) delta is the CC + groupBy leg. */
-  /** `rung` selects ONE phase ("pairs3" | "pairs2" | "full") so the
-    * caller can give each phase its own fresh JVM — the lesson of the
-    * first all-in-one sf10 run: within a single JVM the FIRST rung pays
-    * JIT compilation and heap-growth costs the later rungs inherit for
-    * free, and at sf10 that ordering bias was larger than the phase
-    * split itself (the pairs rung read 64.8 s while the FULL query —
-    * which contains that same pairs join — read 48.8 s right after it).
-    * "all" keeps the one-JVM behavior for quick sf0.1/sf1 looks, where
-    * the bias is small next to the phases. */
-  private def q76Phases(sfDir: String, rung: String): Unit = {
-    require(Set("all", "pairs3", "pairs2", "full")(rung), s"rung $rung")
-    val spark = session("graft-q76-phases", Map.empty)
-    import graft.core.Tables
-    import graft.operators.Dedup
-    val base = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val m1 = base.where(col("doc_id") % 11 === 0)
-      .withColumn("doc_id", col("doc_id") + 200000)
-      .withColumn("text", concat(col("text"), lit(" extra suffix token")))
-    val m2 = base.where(col("doc_id") % 22 === 0)
-      .withColumn("doc_id", col("doc_id") + 400000)
-      .withColumn("text", concat(col("text"), lit(" extra suffix added")))
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def m(body: => Unit): Double = { body; median(timed(runs)(body)) } // 1 warmup
-    def f(d: Double) = f"$d%.2f"
-    def doRung(name: String): (Double, Long) = name match {
-      case "pairs3" =>
-        var n = 0L
-        val t = m { n = Dedup.jaccardPairsPrefixFilter(
-          base.unionByName(m1).unionByName(m2), "doc_id", "text", 3, 0.5).count() }
-        (t, n)
-      case "pairs2" =>
-        var n = 0L
-        val t = m { n = Dedup.jaccardPairsPrefixFilter(
-          base.unionByName(m1), "doc_id", "text", 3, 0.5).count() }
-        (t, n)
-      case "full" =>
-        (m(SparkEntry.queries("q76_neardup_components")(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()), -1L)
-    }
-    if (rung == "all") {
-      val (tPairs3, nPairs3) = doRung("pairs3")
-      val (tPairs2, nPairs2) = doRung("pairs2")
-      val (tFull, _) = doRung("full")
-      println(s"""{"probe":"q76_phases","sf":"$sfDir","runs_per_point":$runs""" +
-        s""","pairs_3way":${f(tPairs3)},"n_pairs_3way":$nPairs3""" +
-        s""","pairs_2way_q29corpus":${f(tPairs2)},"n_pairs_2way":$nPairs2""" +
-        s""","full":${f(tFull)},"cc_plus_tail":${f(tFull - tPairs3)}}""")
-    } else {
-      val (t, n) = doRung(rung)
-      println(s"""{"probe":"q76_phases","sf":"$sfDir","rung":"$rung"""" +
-        s""","runs_per_point":$runs,"median":${f(t)}""" +
-        (if (n >= 0) s""","n_pairs":$n}""" else "}"))
-    }
-    spark.stop()
-  }
-
-  /** q94 decade attribution — the round-8 verdict's #1 ask: q94
-    * (pairs → connected components → keep-min anti-join) read 12.3-14.3×
-    * across warm regimes at the sf1→sf10 decade vs the family's ≤12×
-    * bar, and was adjudicated as page-cache variance but never
-    * phase-attributed the way q76/q152 were. Rungs, each meant for its
-    * OWN fresh JVM (the q76 lesson: the first rung in a shared JVM pays
-    * JIT + heap growth the later rungs inherit):
-    *   pairs = the PPJoin prefix-filter join on q94's exact corpus
-    *           (base + mod-11 suffix mutants);
-    *   cc    = pairs + connected components over the true-pair edges
-    *           (delta vs `pairs` = the CC loop);
-    *   full  = the whole q94 query (delta vs `cc` = the keep-min
-    *           anti-join + final agg).
-    * Cache regime is a PROTOCOL here, not an accident: Spark-level
-    * caches (the operator-internal docs persist + CC checkpoints) are
-    * cleared between samples exactly as Bench does, so every sample
-    * recomputes the pipeline; the PAGE-cache regime is set externally —
-    * dev/evict_cache.py before a cold sample, a prior touch for warm —
-    * and SPARK_GRAFT_WARMUP_SF_DIR points the untimed JIT warmup at a
-    * scratch COPY of the data so warming the compiler doesn't warm the
-    * measured dir's pages. */
-  private def q94Phases(sfDir: String, rung: String): Unit = {
-    require(Set("all", "pairs", "cc", "full")(rung), s"rung $rung")
-    val spark = session("graft-q94-phases", Map.empty)
-    import graft.core.Tables
-    import graft.operators.Dedup
-    def corpus(d: String) = {
-      val base = Tables.documents(spark, d).select("doc_id", "text")
-      val m1 = base.where(col("doc_id") % 11 === 0)
-        .withColumn("doc_id", col("doc_id") + 200000)
-        .withColumn("text", concat(col("text"), lit(" extra suffix token")))
-      base.unionByName(m1)
-    }
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    val warmDir = sys.env.get("SPARK_GRAFT_WARMUP_SF_DIR")
-    def clear(): Unit = {
-      core.InternalCaches.release() // also drains the registry's strong refs
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    def samples(body: String => Unit): Seq[Double] = {
-      if (probeWarmup) { body(warmDir.getOrElse(sfDir)); clear() }
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); body(sfDir)
-        val t = (System.nanoTime() - t0) / 1e9; clear(); t
-      }
-    }
-    var n = -1L
-    val secs = rung match {
-      case "pairs" => samples { d =>
-        n = Dedup.jaccardPairsPrefixFilter(corpus(d), "doc_id", "text", 3, 0.5)
-          .count()
-      }
-      case "cc" => samples { d =>
-        val pairs =
-          Dedup.jaccardPairsPrefixFilter(corpus(d), "doc_id", "text", 3, 0.5)
-        n = Dedup.connectedComponents(pairs, "id_a", "id_b").count()
-      }
-      case "full" | "all" => samples { d =>
-        SparkEntry.queries("q94_neardup_dedup")(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    def f(d: Double) = f"$d%.2f"
-    println(s"""{"probe":"q94_phases","sf":"$sfDir","rung":"$rung"""" +
-      s""","runs":${secs.map(f).mkString("[", ",", "]")}""" +
-      s""","median":${f(median(secs))}""" +
-      s""","warmup":$probeWarmup,"warmup_dir":${warmDir.map("\"" + _ + "\"").getOrElse("null")}""" +
-      (if (n >= 0) s""","n_rows":$n}""" else "}"))
-    spark.stop()
-  }
-
-  /** q181 phase attribution (round-12 verdict #4): where the
-    * co-occurrence query's ~3 s goes. Rungs, each meant for its own
-    * fresh JVM (the q76 lesson):
-    *   memb  = membership dedupe + basket sizing + the eager
-    *           localCheckpoint — the input build;
-    *   pairs = memb + the basket self-join + (ia,ib) aggregation with
-    *           the support filter — the quadratic middle (delta vs memb);
-    *   full  = the whole q181 query (delta vs pairs = the lift stat
-    *           joins + final sort). Same parameters as the bench query
-    *           (lineitem, minSupport=2, maxBasket default). */
-  private def q181Phases(sfDir: String, rung: String): Unit = {
-    require(Set("all", "memb", "pairs", "full")(rung), s"rung $rung")
-    val spark = session("graft-q181-phases", Map.empty)
-    import graft.core.Tables
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def clear(): Unit = {
-      core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    def samples(body: String => Unit): Seq[Double] = {
-      if (probeWarmup) { body(sfDir); clear() }
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); body(sfDir)
-        val t = (System.nanoTime() - t0) / 1e9; clear(); t
-      }
-    }
-    // the stages come from Association itself (round-13 ADVICE: an
-    // inline copy here would silently desynchronize on any operator
-    // change, and the phase attribution would then measure a pipeline
-    // the bench no longer runs); parameters match the bench query
-    def sized(d: String) = operators.Association.basketItems(
-      Tables.lineitem(spark, d)
-        .select(col("l_orderkey").as("b"), col("l_partkey").as("i")),
-      "b", "i", maxBasket = 10000)
-    var n = -1L
-    val secs = rung match {
-      case "memb" => samples { d => n = sized(d).count() }
-      case "pairs" => samples { d =>
-        n = operators.Association.pairSupports(sized(d), minSupport = 2).count()
-      }
-      case "full" | "all" => samples { d =>
-        SparkEntry.queries("q181_item_cooccurrence")(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    def f(d: Double) = f"$d%.2f"
-    println(s"""{"probe":"q181_phases","sf":"$sfDir","rung":"$rung"""" +
-      s""","runs":${secs.map(f).mkString("[", ",", "]")}""" +
-      s""","median":${f(median(secs))},"warmup":$probeWarmup""" +
-      (if (n >= 0) s""","n_rows":$n}""" else "}"))
-    spark.stop()
-  }
-
-  /** q149 phase attribution (round-13 verdict #6): the suite's most
-    * expensive query (3.78 s anchor min) is PPJoin pairs → connected
-    * components → struct-max keeper → anti-join. Rungs, each meant for
-    * its own fresh JVM (the q76 lesson), cut at the OPERATOR boundaries
-    * so every stage is the exact public entry point the query calls —
-    * no inline re-implementation to desynchronize (the q181-rig ADVICE):
-    *   pairs = corpus build + Dedup.jaccardPairsPrefixFilter — the
-    *           prefix-filter inverted index + verification;
-    *   cc    = pairs + Dedup.connectedComponents (delta vs pairs = the
-    *           pointer-jump loop + checkpoint);
-    *   full  = the whole q149 query (delta vs cc = scored join,
-    *           struct-max keeper, anti-join, final agg).
-    * Corpus spelling matches SparkEntry's q149 body (documents ∪ an
-    * 1/11 mutated copy). */
-  private def q149Phases(sfDir: String, rung: String): Unit = {
-    require(Set("all", "pairs", "cc", "full")(rung), s"rung $rung")
-    val spark = session("graft-q149-phases", Map.empty)
-    import graft.core.Tables
-    import graft.operators.Dedup
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def clear(): Unit = {
-      core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    def samples(body: String => Unit): Seq[Double] = {
-      if (probeWarmup) { body(sfDir); clear() }
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); body(sfDir)
-        val t = (System.nanoTime() - t0) / 1e9; clear(); t
-      }
-    }
-    def corpus(d: String) = {
-      val base = Tables.documents(spark, d).select("doc_id", "text")
-      val m1 = base.where(col("doc_id") % 11 === 0)
-        .withColumn("doc_id", col("doc_id") + 200000)
-        .withColumn("text", concat(col("text"), lit(" extra suffix token")))
-      base.unionByName(m1)
-    }
-    def pairs(d: String) =
-      Dedup.jaccardPairsPrefixFilter(corpus(d), "doc_id", "text", 3, 0.5)
-    var n = -1L
-    val secs = rung match {
-      case "pairs" => samples { d => n = pairs(d).count() }
-      case "cc" => samples { d =>
-        n = Dedup.connectedComponents(pairs(d), "id_a", "id_b").count()
-      }
-      case "full" | "all" => samples { d =>
-        SparkEntry.queries("q149_dedup_keep_best")(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    def f(d: Double) = f"$d%.2f"
-    println(s"""{"probe":"q149_phases","sf":"$sfDir","rung":"$rung"""" +
-      s""","runs":${secs.map(f).mkString("[", ",", "]")}""" +
-      s""","median":${f(median(secs))},"warmup":$probeWarmup""" +
-      (if (n >= 0) s""","n_rows":$n}""" else "}"))
-    spark.stop()
-  }
-
-  /** q176 phase attribution: madOutliers is the last unattributed
-    * heavy (2.59 s anchor min) — two exact per-group ranking passes plus
-    * the final gate aggregation over lineitem (600k rows, THREE groups,
-    * so each window sort runs on 3 tasks of a 32-thread box). Rungs cut
-    * at the operator's own package-private stages (the q181-rig ADVICE:
-    * no inline re-spelling):
-    *   cents = scan + half-cent projection (I/O floor);
-    *   med   = cents + first ranking pass + boundary agg;
-    *   dev   = med + broadcast-back + deviation stamp;
-    *   mad   = dev + second ranking pass;
-    *   full  = the whole q176 query to noop (delta vs mad = the gate
-    *           count aggregation + the med/dev re-derivation the lazy
-    *           no-materialize choice accepts). */
-  private def q176Phases(sfDir: String, rung: String): Unit = {
-    require(Set("all", "cents", "med", "dev", "mad", "full",
-      "selmed", "selmad")(rung), s"rung $rung")
-    val spark = session("graft-q176-phases", Map.empty)
-    import graft.core.Tables
-    import graft.operators.Quantiles
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def samples(body: String => Unit): Seq[Double] = {
-      if (probeWarmup) body(sfDir)
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); body(sfDir)
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-    def cents(d: String) = Quantiles.madCents(
-      Tables.lineitem(spark, d), "l_returnflag", "l_extendedprice")
-    var n = -1L
-    val secs = rung match {
-      case "cents" => samples { d => n = cents(d).count() }
-      case "med" => samples { d =>
-        n = Quantiles.exactGroupQuantiles(cents(d), "l_returnflag", "c2",
-          Seq(0.5), Seq("med2")).count()
-      }
-      // selection-spelling twins of med/mad: the skew-safe variant over
-      // the same stages, for window-vs-selection scale comparisons
-      case "selmed" => samples { d =>
-        n = Quantiles.exactGroupQuantilesSkewSafe(cents(d), "l_returnflag",
-          "c2", Seq(0.5), Seq("med2")).count()
-      }
-      case "selmad" => samples { d =>
-        val dev = cents(d)
-          .join(broadcast(Quantiles.exactGroupQuantilesSkewSafe(cents(d),
-            "l_returnflag", "c2", Seq(0.5), Seq("med2"))), "l_returnflag")
-          .withColumn("dev2", abs(col("c2").cast("double") - col("med2")))
-        n = Quantiles.exactGroupQuantilesSkewSafe(dev, "l_returnflag",
-          "dev2", Seq(0.5), Seq("mad2")).count()
-      }
-      case "dev" => samples { d =>
-        n = Quantiles.madDeviations(cents(d), "l_returnflag").count()
-      }
-      case "mad" => samples { d =>
-        n = Quantiles.madScale(
-          Quantiles.madDeviations(cents(d), "l_returnflag"),
-          "l_returnflag").count()
-      }
-      case "full" | "all" => samples { d =>
-        SparkEntry.queries("q176_mad_outliers")(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    def f(d: Double) = f"$d%.2f"
-    println(s"""{"probe":"q176_phases","sf":"$sfDir","rung":"$rung"""" +
-      s""","runs":${secs.map(f).mkString("[", ",", "]")}""" +
-      s""","median":${f(median(secs))},"warmup":$probeWarmup""" +
-      (if (n >= 0) s""","n_rows":$n}""" else "}"))
-    spark.stop()
-  }
-
   /** Streaming fixed-overhead attribution (round-12 verdict #5): six of
     * the bench's top-15 queries are micro-batch drains, and the open
     * question is how much of their per-query seconds is the FLOOR
@@ -700,13 +332,8 @@ object Probes {
     * stream cannot see (start/stop + inter-batch gaps). */
   private def streamFloor(sfDir: String, queryName: String): Unit = {
     val spark = session("graft-stream-floor", Map.empty)
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def clear(): Unit = {
-      core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[
+    val runs = benchRuns(3)
+    val buf = new ConcurrentLinkedQueue[
       org.apache.spark.sql.streaming.StreamingQueryProgress]()
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val listener = new StreamingQueryListener {
@@ -716,37 +343,22 @@ object Probes {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
-    def drain(): Unit = SparkEntry.queries(queryName)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    if (probeWarmup) { drain(); clear() }
+    def drain(): Unit = runQuery(spark, queryName, sfDir)
+    if (probeWarmup) { drain(); clear(spark) }
     val keys = Seq("triggerExecution", "addBatch", "getBatch", "latestOffset",
       "queryPlanning", "walCommit", "commitOffsets")
-    import scala.jdk.CollectionConverters._
     val rows = (1 to runs).map { _ =>
       buf.clear()
       val t0 = System.nanoTime()
       drain()
       val wall = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async: drain it EXACTLY before reading the
-      // buffer (a fixed sleep can drop the final batch's progress event
-      // on a loaded host and overstate overhead_sec — the very floor
-      // this probe measures). Fallback: poll until the buffer is stable.
-      try org.apache.spark.graftglue.BusGlue.waitUntilEmpty(
-        spark.sparkContext, 10000)
-      catch { case _: Throwable =>
-        var last = -1
-        var stable = 0
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (stable < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(100)
-          val n = buf.size()
-          if (n == last) stable += 1 else { stable = 0; last = n }
-        }
-      }
+      // the final batch's progress event must be in before the sums are
+      // read, or overhead_sec is overstated — the very floor measured
+      drainBus(spark)
       val ps = buf.asScala.toSeq
       val sums = keys.map(k => k ->
         ps.flatMap(p => Option(p.durationMs.get(k)).map(_.longValue)).sum).toMap
-      clear()
+      clear(spark)
       (wall, ps.size, ps.map(_.numInputRows).sum, sums)
     }
     spark.streams.removeListener(listener)
@@ -766,35 +378,19 @@ object Probes {
     spark.stop()
   }
 
-  /** q94 phase rounds timed ADJACENTLY inside ONE JVM, order-rotated —
-    * the round-9 escalation after both fresh-JVM sweeps (blocked AND
-    * interleaved) drowned the rung deltas in between-JVM drift: the
-    * same cc rung read 74.6–351.7 s across fresh JVMs on a quiet box,
-    * a 4.7× spread that no (pairs, cc, full) subtraction survives,
-    * while cold-vs-warm page cache moved medians by ~nothing (the r8
-    * "cache regime" adjudication does not hold). Inside one JVM the
-    * three phases of a round run seconds apart — the tightest temporal
-    * pairing available — and the per-round ORDER rotates so JIT depth,
-    * heap shape, and any monotone drift average out of the deltas
-    * instead of landing on whichever rung runs first. Spark-level
-    * caches + the internal-cache registry are drained between phases,
-    * so each phase recomputes its full pipeline. One JSON line per
-    * round; the statistic is the WITHIN-round deltas (cc−pairs = the
-    * CC loop, full−cc = the keep-min anti-join + agg), medianed across
-    * rounds downstream. */
-  /** Per-phase task-metric accumulator — the discriminator behind the
-    * q94 drift investigation. For every timed phase it sums, across all
-    * tasks the phase fired: executor run time (wall inside tasks), CPU
-    * time (on-CPU nanoseconds the kernel actually granted), JVM GC time
-    * inside tasks, shuffle bytes both ways, and memory+disk spill. The
-    * three drift hypotheses separate cleanly on these: host CPU-steal →
-    * cpu_ms stable while wall swings (the work is the same, the clock
-    * isn't); GC regime → gc_ms swings with wall; a plan flip → task
-    * count / shuffle bytes change between runs of the SAME query. */
-  private final class PhaseMetrics extends org.apache.spark.scheduler.SparkListener {
+  /** Per-run task-metric accumulator for the paired probes. For every
+    * timed run it sums, across all tasks the run fired: executor run
+    * time (wall inside tasks), CPU time (on-CPU nanoseconds the kernel
+    * actually granted), JVM GC time inside tasks, shuffle bytes both
+    * ways, and memory+disk spill. The drift hypotheses separate cleanly
+    * on these: host CPU-steal → cpu_ms stable while wall swings (the
+    * work is the same, the clock isn't); GC regime → gc_ms swings with
+    * wall; a plan flip → task count / shuffle bytes change between runs
+    * of the SAME query. */
+  private final class PhaseMetrics extends SparkListener {
     import java.util.concurrent.atomic.AtomicLong
     val tasks, runMs, cpuMs, gcMs, shRead, shWrite, spill = new AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) {
         tasks.incrementAndGet()
@@ -812,94 +408,29 @@ object Probes {
       "sh_write_mb" -> shWrite.get / (1 << 20), "spill_mb" -> spill.get / (1 << 20))
   }
 
-  private def q94JvmRounds(sfDir: String, rounds: Int): Unit = {
-    val spark = session("graft-q94-jvm", Map.empty)
-    import graft.core.Tables
-    import graft.operators.Dedup
-    val metrics = new PhaseMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    def corpus(d: String) = {
-      val base = Tables.documents(spark, d).select("doc_id", "text")
-      val m1 = base.where(col("doc_id") % 11 === 0)
-        .withColumn("doc_id", col("doc_id") + 200000)
-        .withColumn("text", concat(col("text"), lit(" extra suffix token")))
-      base.unionByName(m1)
-    }
-    def clear(): Unit = {
-      core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    def body(rung: String, d: String): Unit = rung match {
-      case "pairs" =>
-        Dedup.jaccardPairsPrefixFilter(corpus(d), "doc_id", "text", 3, 0.5).count()
-      case "cc" =>
-        val pairs = Dedup.jaccardPairsPrefixFilter(corpus(d), "doc_id", "text", 3, 0.5)
-        Dedup.connectedComponents(pairs, "id_a", "id_b").count()
-      case "full" =>
-        SparkEntry.queries("q94_neardup_dedup")(spark, d)
-          .write.format("noop").mode("overwrite").save()
-    }
-    // canary: a fixed pure-CPU codegen job (no I/O, no graft code, and —
-    // round 11 — no exchange, so a width conf change between phases
-    // cannot move it; see core.Canary) — its wall time tracks the box's
-    // EFFECTIVE speed at this instant, independent of anything q94 does.
-    // Runs before every phase. Canary values are compared only WITHIN
-    // one probe run's JSONL, so the round-11 work change (8e9 agg → 2e9
-    // noop projection) does not break any cross-artifact arithmetic.
-    def canary(): Double = core.Canary.seconds(spark)
-    val rungs = Vector("pairs", "cc", "full")
-    if (probeWarmup) { // JIT-warm every phase's code path off the clock
-      val wd = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", sfDir)
-      canary(); rungs.foreach { r => body(r, wd); clear() }
-    }
-    def f(d: Double) = f"$d%.2f"
-    (1 to rounds).foreach { round =>
-      val order = (0 until 3).map(i => rungs((i + round - 1) % 3))
-      val results = order.map { r =>
-        val cw = canary()
-        val before = metrics.snap()
-        val t0 = System.nanoTime(); body(r, sfDir)
-        val t = (System.nanoTime() - t0) / 1e9; clear()
-        val after = metrics.snap()
-        val d = after.map { case (k, v) => k -> (v - before(k)) }
-        r -> ((t, cw, d))
-      }.toMap
-      def m(r: String): String = {
-        val (t, cw, d) = results(r)
-        s""""$r":${f(t)},"${r}_canary":${f(cw)},"${r}_m":{${
-          d.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}"""
-      }
-      println(s"""{"probe":"q94_jvm","sf":"$sfDir","round":$round""" +
-        s""","order":${order.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-        s""",${m("pairs")},${m("cc")},${m("full")}""" +
-        s""","d_cc":${f(results("cc")._1 - results("pairs")._1)}""" +
-        s""","d_tail":${f(results("full")._1 - results("cc")._1)}}""")
-    }
-    spark.stop()
-  }
+  /** One timed arm of a paired round: wall seconds, the canary read just
+    * before it, and its summed task metrics. */
+  private final case class Arm(secs: Double, canary: Double, m: Map[String, Long])
 
-  /** Paired scale-step measurement — the round-9 third-decade
-    * instrument. Between-JVM wall subtraction proved unusable on this
-    * box (same rung, same data: 74.6–351.7 s across six fresh JVMs,
-    * Q94_JVM investigation), so the dirA→dirB ratio is measured the way
-    * the bench `--compare` gate pairs A/B: BOTH scales run adjacently
-    * inside ONE JVM, order rotated per round, a pure-CPU canary before
-    * each timed run, and per-run summed task metrics. CPU and shuffle
-    * ratios are the drift-immune numerators; the wall ratio is reported
-    * but adjudicated against the canary pair. One JSONL line per round;
-    * medians computed downstream (drop round 1 — GC/JIT regime still
-    * settling, same rule as q94jvm). */
-  private def decadePairs(dirA: String, dirB: String, query: String,
-                          rounds: Int): Unit = {
-    val spark = session("graft-decade", Map.empty)
+  /** The paired-rounds protocol shared by `decade` and `width`: two arms
+    * run adjacently inside ONE JVM, order flipped each round, a pure-CPU
+    * canary (exchange-free; see core.Canary) before each timed run, and
+    * per-run summed task metrics. Between-JVM wall subtraction proved
+    * unusable on a shared box (same rung, same data: 74.6–351.7 s across
+    * six fresh JVMs, Q94_JVM.jsonl), so the treatment is always measured
+    * against its twin seconds apart. The untimed warmup runs the first
+    * arm against SPARK_GRAFT_WARMUP_SF_DIR (default: the first arm's own
+    * dir), so warming the JIT need not warm the measured dir's pages.
+    * `run(tag, dir)` executes one arm; `fields` renders the probe's own
+    * JSON fields of a round from every arm's results. */
+  private def pairedRounds(spark: SparkSession, rounds: Int,
+                           arms: Vector[(String, String)],
+                           run: (String, String) => Unit)
+                          (fields: Map[String, Arm] => String): Unit = {
     val metrics = new PhaseMetrics
     spark.sparkContext.addSparkListener(metrics)
-    val q = SparkEntry.queries(query)
-    def clear(): Unit = {
-      core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    def clearAll(): Unit = {
+      clear(spark)
       // force shuffle-file reclamation between runs: the ContextCleaner
       // only removes a run's shuffle files once its ShuffleDependencies
       // are GC'd, and a paired (sf10 + sf30) round otherwise holds BOTH
@@ -908,207 +439,272 @@ object Probes {
       System.gc()
       Thread.sleep(3000)
     }
-    def body(d: String): Unit =
-      q(spark, d).write.format("noop").mode("overwrite").save()
-    def canary(): Double = core.Canary.seconds(spark) // exchange-free; see core.Canary
-    if (probeWarmup) { // JIT-warm the query's code path off the clock
-      val wd = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", dirA)
-      canary(); body(wd); clear()
+    def canary(): Double = core.Canary.seconds(spark)
+    if (probeWarmup) {
+      val (tag, dir) = arms.head
+      canary(); run(tag, sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", dir)); clearAll()
     }
     def f(d: Double) = f"$d%.2f"
-    val dirs = Vector("a" -> dirA, "b" -> dirB)
     (1 to rounds).foreach { round =>
-      val order = if (round % 2 == 1) dirs else dirs.reverse
-      val results = order.map { case (tag, d) =>
+      val order = if (round % 2 == 1) arms else arms.reverse
+      val results = order.map { case (tag, dir) =>
         val cw = canary()
         val before = metrics.snap()
-        val t0 = System.nanoTime(); body(d)
-        val t = (System.nanoTime() - t0) / 1e9; clear()
+        val t0 = System.nanoTime(); run(tag, dir)
+        val t = (System.nanoTime() - t0) / 1e9; clearAll()
         val after = metrics.snap()
-        val delta = after.map { case (k, v) => k -> (v - before(k)) }
-        tag -> ((t, cw, delta))
+        tag -> Arm(t, cw, after.map { case (k, v) => k -> (v - before(k)) })
       }.toMap
-      def m(tag: String): String = {
-        val (t, cw, d) = results(tag)
-        s""""$tag":${f(t)},"${tag}_canary":${f(cw)},"${tag}_m":{${
-          d.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}"""
+      val perArm = arms.map { case (tag, _) =>
+        val a = results(tag)
+        s""""$tag":${f(a.secs)},"${tag}_canary":${f(a.canary)},"${tag}_m":{${
+          a.m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}"""
       }
-      val (ta, _, da) = results("a")
-      val (tb, _, db) = results("b")
-      val cpuR =
-        if (da("cpu_ms") > 0) db("cpu_ms").toDouble / da("cpu_ms") else -1.0
-      val shR = {
-        val aw = da("sh_write_mb")
-        if (aw > 0) db("sh_write_mb").toDouble / aw else -1.0
-      }
-      println(s"""{"probe":"decade","query":"$query","dir_a":"$dirA"""" +
-        s""","dir_b":"$dirB","round":$round""" +
+      println(s"""{${fields(results)},"round":$round""" +
         s""","order":${order.map(o => "\"" + o._1 + "\"").mkString("[", ",", "]")}""" +
-        s""",${m("a")},${m("b")}""" +
-        s""","wall_ratio":${f(tb / ta)},"cpu_ratio":${f(cpuR)}""" +
-        s""","shuffle_ratio":${f(shR)}}""")
+        perArm.mkString(",", ",", "}"))
+    }
+  }
+
+  /** Paired scale-step measurement — the third-decade instrument: the
+    * dirA→dirB ratio of one query, both scales inside one JVM (see
+    * [[pairedRounds]]). CPU and shuffle ratios are the drift-immune
+    * numerators; the wall ratio is reported but adjudicated against the
+    * canary pair. Medians are computed downstream (drop round 1 — GC/JIT
+    * regime still settling). */
+  private def decadePairs(dirA: String, dirB: String, query: String,
+                          rounds: Int): Unit = {
+    val spark = session("graft-decade", Map.empty)
+    pairedRounds(spark, rounds, Vector("a" -> dirA, "b" -> dirB),
+      (_, d) => runQuery(spark, query, d)) { r =>
+      val (a, b) = (r("a"), r("b"))
+      def ratio(k: String) = if (a.m(k) > 0) b.m(k).toDouble / a.m(k) else -1.0
+      f""""probe":"decade","query":"$query","dir_a":"$dirA","dir_b":"$dirB"""" +
+        f""","wall_ratio":${b.secs / a.secs}%.2f,"cpu_ratio":${ratio("cpu_ms")}%.2f""" +
+        f""","shuffle_ratio":${ratio("sh_write_mb")}%.2f"""
     }
     spark.stop()
   }
 
-  /** Within-JVM shuffle-WIDTH pairing at ONE scale — the round-10
-    * instrument for the last open q94 term. The sf30 campaign's width
-    * hypothesis ("fixed 64 partitions turn a 3× data step into
-    * 3×-deeper per-partition sorts") could not be tested across JVMs
-    * (±50% between-JVM drift) or across paired scales (ENOSPC holding
-    * both scales' shuffle files); but `spark.sql.shuffle.partitions`
-    * is a RUNTIME conf, so one JVM alternates the two widths on the
-    * same data, order rotated per round — the decadePairs protocol
-    * with width, not scale, as the treatment. AQE stays on in both
-    * arms: the wide arm is exactly the DEPLOY prescription ("set the
-    * initial width high, let AQE coalesce to its advisory"), so the
-    * comparison falsifies or confirms the PRESCRIPTION, not a strawman
-    * with AQE off. spill_mb is the mechanism witness: the depth term
-    * predicts spill at the narrow width and its absence at the wide. */
+  /** Within-JVM shuffle-WIDTH pairing at ONE scale: `spark.sql.shuffle.
+    * partitions` is a RUNTIME conf, so one JVM alternates the two widths
+    * on the same data (see [[pairedRounds]]) — the decade protocol with
+    * width, not scale, as the treatment. AQE stays on in both arms: the
+    * wide arm is exactly the DEPLOY prescription ("set the initial width
+    * high, let AQE coalesce to its advisory"), so the comparison
+    * falsifies or confirms the PRESCRIPTION, not a strawman with AQE
+    * off. spill_mb is the mechanism witness: the depth term predicts
+    * spill at the narrow width and its absence at the wide. */
   private def widthPairs(sfDir: String, query: String, w1: Int, w2: Int,
                          rounds: Int): Unit = {
     val spark = session("graft-width", Map.empty)
-    val metrics = new PhaseMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    val q = SparkEntry.queries(query)
-    def clear(): Unit = {
-      core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      System.gc() // let the ContextCleaner reclaim shuffle files (disk!)
-      Thread.sleep(3000)
-    }
-    def body(w: Int): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-      q(spark, sfDir).write.format("noop").mode("overwrite").save()
-    }
-    def canary(): Double = core.Canary.seconds(spark) // exchange-free; see core.Canary
-    if (probeWarmup) {
-      val wd = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", sfDir)
-      canary(); body(w1); clear()
-    }
-    def f(d: Double) = f"$d%.2f"
-    val arms = Vector("narrow" -> w1, "wide" -> w2)
-    (1 to rounds).foreach { round =>
-      val order = if (round % 2 == 1) arms else arms.reverse
-      val results = order.map { case (tag, w) =>
-        val cw = canary()
-        val before = metrics.snap()
-        val t0 = System.nanoTime(); body(w)
-        val t = (System.nanoTime() - t0) / 1e9; clear()
-        val after = metrics.snap()
-        val delta = after.map { case (k, v) => k -> (v - before(k)) }
-        tag -> ((t, cw, delta))
-      }.toMap
-      def m(tag: String): String = {
-        val (t, cw, d) = results(tag)
-        s""""$tag":${f(t)},"${tag}_canary":${f(cw)},"${tag}_m":{${
-          d.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}"""
-      }
-      val (tn, _, _) = results("narrow")
-      val (tw, _, _) = results("wide")
-      println(s"""{"probe":"width","query":"$query","sf":"$sfDir"""" +
-        s""","w_narrow":$w1,"w_wide":$w2,"round":$round""" +
-        s""","order":${order.map(o => "\"" + o._1 + "\"").mkString("[", ",", "]")}""" +
-        s""",${m("narrow")},${m("wide")}""" +
-        s""","wide_over_narrow":${f(tw / tn)}}""")
+    val width = Map("narrow" -> w1, "wide" -> w2)
+    pairedRounds(spark, rounds, Vector("narrow" -> sfDir, "wide" -> sfDir),
+      { (tag, d) =>
+        spark.conf.set("spark.sql.shuffle.partitions", width(tag).toString)
+        runQuery(spark, query, d)
+      }) { r =>
+      f""""probe":"width","query":"$query","sf":"$sfDir","w_narrow":$w1,"w_wide":$w2""" +
+        f""","wide_over_narrow":${r("wide").secs / r("narrow").secs}%.2f"""
     }
     spark.stop()
   }
 
-  /** Per-STAGE wall attribution for one query — the instrument that
-    * separates "the work grew" from "the work wouldn't parallelize".
-    * Runs the query once (noop sink) and prints one JSON line per stage:
-    * task count, stage wall (submission→completion), summed task time,
-    * the longest single task, and the implied concurrency
-    * (task-time / wall). A stage whose concurrency reads ~1 on a
-    * local[32] box is a serial bottleneck regardless of how linearly
-    * its work scales — the q124 sf30 campaign found exactly that shape
-    * (wall flat across a 3× data step while CPU and shuffle grew
-    * linearly, i.e. wall was bound by the least-parallel stage, not by
-    * the work). */
-  private def stagesOf(queryName: String, sfDir: String): Unit = {
-    val spark = session("graft-stageprobe", Map.empty)
-    final case class St(name: String, tasks: Int, wallMs: Long,
-                        taskMs: Long, maxTaskMs: Long, inMb: Long, shwMb: Long)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]()
-    // longest single task per stage, fed by onTaskEnd (stage-level
-    // TaskMetrics only carries sums) — the number that says whether a
-    // stage's wall is one straggler or uniform depth
-    val maxTask = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null)
-          maxTask.merge(te.stageId, te.taskInfo.duration,
-            (a, b) => if (a >= b) a else b)
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for {
-          s <- si.submissionTime; c <- si.completionTime
-        } yield c - s).getOrElse(0L)
-        val tm = si.taskMetrics
-        // JSONL-safe stage label: drop anything that could break the
-        // line (quotes, backslashes, control chars)
-        val safeName = si.name.takeWhile(_ != '\n').take(60)
-          .filter(c => c >= ' ' && c != '"' && c != '\\')
-        stages.add(St(safeName, si.numTasks,
-          wall, tm.executorRunTime,
-          Option(maxTask.get(si.stageId)).map(_.longValue).getOrElse(0L),
-          tm.inputMetrics.bytesRead / (1 << 20),
-          tm.shuffleWriteMetrics.bytesWritten / (1 << 20)))
-      }
-    })
-    val t0 = System.nanoTime()
-    SparkEntry.queries(queryName)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener bus drain
-    import scala.jdk.CollectionConverters._
-    stages.asScala.toSeq.sortBy(-_.taskMs).foreach { s =>
-      val conc = if (s.wallMs > 0) s.taskMs.toDouble / s.wallMs else 0.0
-      println(f"""{"probe":"stages","query":"$queryName","sf":"$sfDir","stage":"${s.name}","tasks":${s.tasks},"wall_ms":${s.wallMs},"task_ms":${s.taskMs},"max_task_ms":${s.maxTaskMs},"concurrency":$conc%.1f,"in_mb":${s.inMb},"shw_mb":${s.shwMb}}""")
+  /** Fresh-JVM phase rungs — the protocol `stages` replaced, kept only
+    * for q149 and q181, whose committed shares (cc ≈ 90% of q149, memb ≈
+    * 91% of q181) `stages` does not reproduce; CHANGES.md has both sets of
+    * numbers. A rung times one prefix of the query through the operators'
+    * own entry points (`full`/`all` = the whole query), after an untimed
+    * warmup of the same rung, caches cleared between samples. Give each
+    * rung its own JVM: the first rung in a shared JVM pays JIT and heap
+    * growth the later rungs inherit. Rung walls include planning and, for
+    * a prefix, one read of its output, so they do not subtract cleanly. */
+  private def phaseRungs(spark: SparkSession, query: String, sfDir: String, rung: String)
+                        (prefixes: Map[String, String => Long]): Unit = {
+    require(rung == "all" || rung == "full" || prefixes.contains(rung), s"rung $rung")
+    var n = -1L
+    def body(d: String): Unit =
+      prefixes.get(rung).fold(runQuery(spark, query, d))(p => n = p(d))
+    if (probeWarmup) { body(sfDir); clear(spark) }
+    val secs = (1 to benchRuns(3)).map { _ =>
+      val t0 = System.nanoTime(); body(sfDir)
+      val t = (System.nanoTime() - t0) / 1e9; clear(spark); t
     }
-    println(f"""{"probe":"stages","query":"$queryName","sf":"$sfDir","total_wall_s":$wall%.2f,"n_stages":${stages.size}}""")
+    def f(d: Double) = f"$d%.2f"
+    println(s"""{"probe":"${query.takeWhile(_ != '_')}_phases","sf":"$sfDir","rung":"$rung"""" +
+      s""","runs":${secs.map(f).mkString("[", ",", "]")}""" +
+      s""","median":${f(median(secs))},"warmup":$probeWarmup""" +
+      (if (n >= 0) s""","n_rows":$n}""" else "}"))
     spark.stop()
   }
 
-  private def q152Phases(sfDir: String): Unit = {
-    val spark = session("graft-q152-phases", Map.empty)
-    import graft.core.Tables
-    val o = Tables.orders(spark, sfDir)
-    val payload = to_json(struct(
-      col("o_orderstatus").as("status"),
-      struct(col("o_totalprice").as("amount"),
-        col("o_orderpriority").as("prio")).as("detail"),
-      array(col("o_custkey"), col("o_orderkey")).as("refs")))
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def m(body: => Unit): Double = { body; median(timed(runs)(body)) } // 1 warmup
-    // cumulative prefixes; each consumes its product via an agg so
-    // column pruning can't skip the phase under measurement
-    val tScan = m(o.agg(count(lit(1)), sum(col("o_totalprice"))).head())
-    val tJson = m(o.select(payload.as("p")).agg(sum(length(col("p")))).head())
-    // parse_json and variant_get are measured as ONE rung: separating
-    // them would need the probe to consume the bare variant, and every
-    // consumption of a variant re-serializes it (to_json/cast), biasing
-    // the split; the typed variant_get outputs consume as plain scalars
-    val tGet = m(o.select(parse_json(payload).as("var"))
-      .select(
-        variant_get(col("var"), "$.status", "string").as("status"),
-        variant_get(col("var"), "$.detail.amount", "double").as("amount"),
-        variant_get(col("var"), "$.detail.prio", "string").as("prio"),
-        variant_get(col("var"), "$.refs[0]", "bigint").as("custkey"))
-      .agg(sum(length(col("status"))), sum(col("amount")),
-        sum(length(col("prio"))), sum(col("custkey"))).head())
-    val tFull = m(SparkEntry.queries("q152_variant_shred")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    def f(d: Double) = f"$d%.2f"
-    println(s"""{"probe":"q152_phases","sf":"$sfDir","runs_per_point":$runs""" +
-      s""","scan":${f(tScan)},"to_json":${f(tJson)}""" +
-      s""","parse_and_get":${f(tGet)},"full":${f(tFull)}""" +
-      s""","deltas":{"to_json":${f(tJson - tScan)}""" +
-      s""","parse_and_get":${f(tGet - tJson)},"group_agg":${f(tFull - tGet)}}}""")
+  /** q149 rungs: pairs = corpus + Dedup.jaccardPairsPrefixFilter; cc =
+    * pairs + Dedup.connectedComponents; full = + scored join, keeper,
+    * anti-join and final agg. Corpus spelled as SparkEntry's q149. */
+  private def q149Phases(sfDir: String, rung: String): Unit = {
+    val spark = session("graft-q149-phases", Map.empty)
+    import graft.operators.Dedup
+    def pairs(d: String) = {
+      val base = core.Tables.documents(spark, d).select("doc_id", "text")
+      val m1 = base.where(col("doc_id") % 11 === 0)
+        .withColumn("doc_id", col("doc_id") + 200000)
+        .withColumn("text", concat(col("text"), lit(" extra suffix token")))
+      Dedup.jaccardPairsPrefixFilter(base.unionByName(m1), "doc_id", "text", 3, 0.5)
+    }
+    phaseRungs(spark, "q149_dedup_keep_best", sfDir, rung)(Map(
+      "pairs" -> (d => pairs(d).count()),
+      "cc" -> (d => Dedup.connectedComponents(pairs(d), "id_a", "id_b").count())))
+  }
+
+  /** q181 rungs: memb = membership build (Association.basketItems, its
+    * eager checkpoint included); pairs = memb + the (ia, ib) support
+    * aggregation; full = + the lift joins and final sort. Parameters as
+    * in the bench query. */
+  private def q181Phases(sfDir: String, rung: String): Unit = {
+    val spark = session("graft-q181-phases", Map.empty)
+    import graft.operators.Association
+    def memb(d: String) = Association.basketItems(core.Tables.lineitem(spark, d)
+      .select(col("l_orderkey").as("b"), col("l_partkey").as("i")), "b", "i", maxBasket = 10000)
+    phaseRungs(spark, "q181_item_cooccurrence", sfDir, rung)(Map(
+      "memb" -> (d => memb(d).count()),
+      "pairs" -> (d => Association.pairSupports(memb(d), minSupport = 2).count())))
+  }
+
+  /** One completed stage, charged to the scope of the job that ran it. */
+  private final case class Stage(scope: String, id: Int, name: String,
+                                 tasks: Int, wallMs: Long, taskMs: Long,
+                                 maxTaskMs: Long, inBytes: Long, shReadBytes: Long,
+                                 shWriteBytes: Long, spillBytes: Long, gcMs: Long)
+
+  /** A job's innermost scope opening, start and end (epoch ms). */
+  private final case class Job(scope: core.Trace.Scope, startMs: Long, endMs: Long)
+
+  /** Folds every job and stage into the innermost [[core.Trace]] scope of
+    * its job; a job with no graft scope is charged to `fallback` (the
+    * query's own scope). `take()` hands over what was folded since the
+    * last take — call it after [[drainBus]]. */
+  private final class ScopeFold(fallback: String) extends SparkListener {
+    private val stageScope = mutable.Map.empty[Int, String]
+    private val maxTask = mutable.Map.empty[Int, Long]
+    private val jobStart = mutable.Map.empty[Int, (core.Trace.Scope, Long)]
+    private val jobs = mutable.ArrayBuffer.empty[Job]
+    private val stages = mutable.ArrayBuffer.empty[Stage]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val scope = core.Trace.scopeOf(Option(e.properties)
+        .map(_.getProperty(core.Trace.JobTagsProperty)).orNull)
+        .getOrElse(core.Trace.Scope(0, Long.MaxValue, fallback))
+      jobStart(e.jobId) = (scope, e.time)
+      // a stage runs in the first job that lists it; later jobs skip it
+      e.stageIds.foreach(s => if (!stageScope.contains(s)) stageScope(s) = scope.name)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobStart.remove(e.jobId).foreach { case (scope, t0) => jobs += Job(scope, t0, e.time) }
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (e.taskInfo != null)
+        maxTask(e.stageId) = math.max(maxTask.getOrElse(e.stageId, 0L), e.taskInfo.duration)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      val tm = si.taskMetrics
+      val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
+      // JSONL-safe stage label: drop anything that could break the line
+      val name = si.name.takeWhile(_ != '\n').take(60)
+        .filter(c => c >= ' ' && c != '"' && c != '\\')
+      stages += Stage(stageScope.getOrElse(si.stageId, fallback), si.stageId, name,
+        si.numTasks, wall, tm.executorRunTime, maxTask.getOrElse(si.stageId, 0L),
+        tm.inputMetrics.bytesRead, tm.shuffleReadMetrics.totalBytesRead,
+        tm.shuffleWriteMetrics.bytesWritten, tm.memoryBytesSpilled + tm.diskBytesSpilled,
+        tm.jvmGCTime)
+    }
+
+    def take(): (Seq[Job], Seq[Stage]) = synchronized {
+      val out = (jobs.toSeq, stages.toSeq)
+      jobs.clear(); stages.clear(); maxTask.clear()
+      out
+    }
+  }
+
+  /** Per-scope breakdown of one query — the single attribution tool for
+    * every query, replacing rigs that each re-spelled one query's phases.
+    * After an untimed warmup, the query runs `SPARK_GRAFT_BENCH_RUNS`
+    * (default 3) times inside its own [[core.Trace]] scope, caches
+    * cleared between runs; a listener charges every stage to the
+    * innermost scope of its job. Wall time is charged the same way: each
+    * opening of a scope spans from its opening to its last job's end, and
+    * every instant goes to the innermost opening that spans it — so the
+    * driver time an operator spends planning its jobs is the operator's.
+    * The scope walls plus `after_jobs_s` (driver time after the last
+    * job) add up to the query wall. Work an operator leaves lazy is
+    * charged to the scope that first materializes it.
+    *
+    * Prints one query line (every run's wall), then per scope, heaviest
+    * first: the medians over runs of wall, share of the query wall, task
+    * time, longest task, input, shuffle read/write, spill and GC, with
+    * that scope's stages of the median run beneath. A stage whose
+    * concurrency (task time / wall) reads ~1 on a many-core box is a
+    * serial bottleneck however linearly its work scales. */
+  private def stages(queryName: String, sfDir: String): Unit = {
+    val spark = session("graft-stages", Map.empty)
+    val fold = new ScopeFold(queryName)
+    spark.sparkContext.addSparkListener(fold)
+    def run(): Double = {
+      val t0 = System.nanoTime()
+      core.Trace.scope(queryName)(runQuery(spark, queryName, sfDir))
+      val t = (System.nanoTime() - t0) / 1e9
+      clear(spark); drainBus(spark)
+      t
+    }
+    if (probeWarmup) { run(); fold.take() }
+    val runs = (1 to benchRuns(3)).map(_ => (run(), fold.take()))
+    val walls = runs.map(_._1)
+
+    def scopeWalls(jobs: Seq[Job]): Map[String, Double] = {
+      val spans = jobs.groupBy(_.scope).map { case (sc, js) =>
+        (sc, (sc.openedMs +: js.map(_.startMs)).min, js.map(_.endMs).max) }.toSeq
+      val cuts = spans.flatMap(sp => Seq(sp._2, sp._3)).distinct.sorted
+      cuts.zip(cuts.drop(1)).flatMap { case (a, b) =>
+        spans.filter(sp => sp._2 <= a && sp._3 >= b).maxByOption(_._1.id)
+          .map(_._1.name -> (b - a) / 1000.0)
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+    }
+    // per run: scope -> (wall seconds, its stages)
+    val perRun = runs.map { case (_, (jobs, sts)) =>
+      val wall = scopeWalls(jobs)
+      (wall.keySet ++ sts.map(_.scope)).map(s =>
+        s -> (wall.getOrElse(s, 0.0), sts.filter(_.scope == s))).toMap
+    }
+    def med(scope: String)(g: ((Double, Seq[Stage])) => Double): Double =
+      median(perRun.map(_.get(scope).map(g).getOrElse(0.0)))
+    def sum(scope: String)(g: Stage => Long): Double = med(scope)(_._2.map(g).sum.toDouble)
+    def mb(b: Double) = b / (1 << 20)
+    val medWall = median(walls)
+    val medRun = walls.indexOf(medWall)
+    val outside = median(walls.zip(perRun).map { case (w, r) => w - r.values.map(_._1).sum })
+    val scopes = perRun.flatMap(_.keys).distinct.map(s => s -> med(s)(_._1)).sortBy(-_._2)
+    println(f"""{"probe":"stages","query":"$queryName","sf":"$sfDir","warmup":$probeWarmup""" +
+      f""","runs":${walls.map(w => f"$w%.3f").mkString("[", ",", "]")}""" +
+      f""","median_wall_s":$medWall%.3f,"after_jobs_s":$outside%.3f,"scopes":${scopes.size}}""")
+    scopes.foreach { case (s, wallS) =>
+      println(f"""{"probe":"stages","query":"$queryName","scope":"$s"""" +
+        f""","wall_s":$wallS%.3f,"share":${wallS / medWall}%.3f""" +
+        f""","stages":${med(s)(_._2.size.toDouble)}%.0f,"tasks":${sum(s)(_.tasks.toLong)}%.0f""" +
+        f""","task_s":${sum(s)(_.taskMs) / 1000}%.3f""" +
+        f""","max_task_s":${med(s)(x => (0L +: x._2.map(_.maxTaskMs)).max / 1000.0)}%.3f""" +
+        f""","in_mb":${mb(sum(s)(_.inBytes))}%.2f,"sh_read_mb":${mb(sum(s)(_.shReadBytes))}%.2f""" +
+        f""","sh_write_mb":${mb(sum(s)(_.shWriteBytes))}%.2f""" +
+        f""","spill_mb":${mb(sum(s)(_.spillBytes))}%.2f,"gc_s":${sum(s)(_.gcMs) / 1000}%.3f}""")
+      perRun(medRun).get(s).toSeq.flatMap(_._2).sortBy(_.id).foreach { st =>
+        val conc = if (st.wallMs > 0) st.taskMs.toDouble / st.wallMs else 0.0
+        println(f"""{"probe":"stages","query":"$queryName","scope":"$s","stage":${st.id}""" +
+          f""","name":"${st.name}","tasks":${st.tasks},"wall_ms":${st.wallMs}""" +
+          f""","task_ms":${st.taskMs},"max_task_ms":${st.maxTaskMs},"concurrency":$conc%.1f""" +
+          f""","in_mb":${mb(st.inBytes)}%.2f,"sh_read_mb":${mb(st.shReadBytes)}%.2f""" +
+          f""","sh_write_mb":${mb(st.shWriteBytes)}%.2f,"spill_mb":${mb(st.spillBytes)}%.2f""" +
+          f""","gc_ms":${st.gcMs}}""")
+      }
+    }
     spark.stop()
   }
 }

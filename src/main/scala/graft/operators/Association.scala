@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,10 +26,7 @@ object Association {
 
   /** The membership-build stage: (basket, item) rows → one row per
     * under-cap basket carrying its distinct-item array, checkpointed
-    * for its multiple consumers. Package-private and shared with the
-    * Probes q181 phase rig, so the probe always measures the exact
-    * pipeline the operator runs (round-13 ADVICE: the rig's inline copy
-    * of this stage would silently desynchronize on any operator change).
+    * for its multiple consumers.
     *
     * ONE exchange builds the whole universe: raw memberships group by
     * basket into a distinct-item array, and over-cap baskets drop. The
@@ -47,8 +45,8 @@ object Association {
     * memberships still yields an empty-array row and counts toward
     * n_baskets: it exists, it just holds no items). Null memberships
     * are feed noise, not items; pinned by OperatorsSpec. */
-  private[graft] def basketItems(df: DataFrame, basketCol: String,
-                                 itemCol: String, maxBasket: Int): DataFrame = {
+  private[graft] def basketItems(df: DataFrame, basketCol: String, itemCol: String,
+                                 maxBasket: Int): DataFrame = Trace.scope("association.basket_items") {
     import org.apache.spark.sql.graftglue.ColumnGlue
     df.select(col(basketCol).as("b"), col(itemCol).as("i"))
       .groupBy("b")
@@ -62,8 +60,8 @@ object Association {
   /** The pair-generation stage over [[basketItems]] output: pairs
     * explode from each basket's own array — no self-join, no second
     * exchange of memberships; the only pair-shaped shuffle is the
-    * (ia, ib) aggregation itself (map-side partials apply). Shared with
-    * the Probes rig for the same reason as [[basketItems]]. */
+    * (ia, ib) aggregation itself (map-side partials apply). Package-
+    * private for the `Probes q181` pairs rung. */
   private[graft] def pairSupports(sized: DataFrame, minSupport: Long): DataFrame =
     sized
       .select(explode(col("__items")).as("ia"), col("__items"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -36,7 +37,7 @@ object Dedup {
     * the collect is bounded metadata — at most totalRows/maxRows over-cap
     * keys can exist. `maxRows <= 0` disables the guard. */
   private def capBands(banded: DataFrame, bandCol: String, maxRows: Int,
-                       who: String): DataFrame = {
+                       who: String): DataFrame = Trace.scope("dedup.cap_bands") {
     if (maxRows <= 0) return banded
     // tracked persist: lazily-returned, so the operator has no correct
     // unpersist point — long-lived sessions release via
@@ -291,7 +292,8 @@ object Dedup {
     // PLUS the full groupBy exchange+aggregate once per side. The r13
     // revert killed a cache of the full `shared` posting table (docs-sized,
     // +0.7 s under suite pressure); freq is orders of magnitude smaller
-    // (distinct shared shingles, two fixed-width columns, SER level).
+    // (distinct shared shingles, two fixed-width columns, default
+    // MEMORY_AND_DISK level).
     val freq = graft.core.InternalCaches.persistTracked(
       posting.groupBy("g").agg(count(lit(1)).as("df"))
         .where(col("df") >= 2),
@@ -347,9 +349,9 @@ object Dedup {
     * — so this THROWS unless `failOnNonConvergence = false`, which logs
     * and returns the partial labeling for diagnostics. Returns
     * (id, component). */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20,
-                          failOnNonConvergence: Boolean = true): DataFrame = {
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 20,
+                          failOnNonConvergence: Boolean = true
+                         ): DataFrame = Trace.scope("dedup.components") {
     // Lineage truncation is the load-bearing detail of this loop. Each
     // round's plan references the previous round's labels TWICE (once in
     // the neighbor-min join, once in the merge), so without a cut the
@@ -564,7 +566,8 @@ object Dedup {
                                     idCol: String, textCol: String,
                                     n: Int = 8,
                                     bloomHexChars: Int = 0,
-                                    literalMaxHexChars: Int = 6): DataFrame = {
+                                    literalMaxHexChars: Int = 6
+                                   ): DataFrame = Trace.scope("dedup.contamination_bloom") {
     val testGrams = testDocs
       .withColumn("__toks", tokens(col(textCol)))
       .select(explode(shinglesFromTokens(col("__toks"), n)).as("g"))
@@ -1088,17 +1091,19 @@ object Dedup {
                               idCol: String, textCol: String,
                               n: Int = 3, k: Int = 32, bands: Int = 8,
                               threshold: Double = 0.6): DataFrame =
-    // cut the freshly-built batch index HERE, not inside the drop logic:
-    // it fans out to three consumers there (index probe + both
-    // intra-batch legs), and uncut each one would re-tokenize and
-    // re-minhash the whole delivery; callers that arrive through
-    // dedupBatchAgainstIndex have already persisted their batch index,
-    // and a second materialization inside the shared path would just be
-    // an extra job per delivery
-    nearDupDropsFromIndex(
-      graft.core.Checkpoints.cut(
-        minhashIndexPortable(newDocs, idCol, textCol, n, k, bands)),
-      index, k, threshold)
+    Trace.scope("dedup.incremental_drops") {
+      // cut the freshly-built batch index HERE, not inside the drop logic:
+      // it fans out to three consumers there (index probe + both
+      // intra-batch legs), and uncut each one would re-tokenize and
+      // re-minhash the whole delivery; callers that arrive through
+      // dedupBatchAgainstIndex have already persisted their batch index,
+      // and a second materialization inside the shared path would just be
+      // an extra job per delivery
+      nearDupDropsFromIndex(
+        graft.core.Checkpoints.cut(
+          minhashIndexPortable(newDocs, idCol, textCol, n, k, bands)),
+        index, k, threshold)
+    }
 
   /** The drop decision given an ALREADY-BUILT batch index — split out so
     * [[dedupBatchAgainstIndex]] can build each batch's signatures exactly
@@ -1154,8 +1159,8 @@ object Dedup {
   def dedupBatchAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
                              outPath: String, indexPath: String,
                              n: Int = 3, k: Int = 32, bands: Int = 8,
-                             threshold: Double = 0.6,
-                             nBuckets: Int = 16): Unit = {
+                             threshold: Double = 0.6, nBuckets: Int = 16
+                            ): Unit = Trace.scope("dedup.batch_against_index") {
     val ss = batch.sparkSession
     val b = batch.persist()
     // signatures built ONCE per batch and reused for both the drop

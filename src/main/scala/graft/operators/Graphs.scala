@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,7 +58,7 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85,
                exactFold: Boolean = true,
-               exactFoldMaxInDegree: Long = 100000L): DataFrame = {
+               exactFoldMaxInDegree: Long = 100000L): DataFrame = Trace.scope("graphs.pagerank") {
     require(iters >= 1 && iters <= 50, s"iters $iters out of [1,50]")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "graphs"))
@@ -237,7 +238,8 @@ object Graphs {
     * ≥1 triangle. Two shuffles per wedge step (join on wedge center,
     * then the closing-edge join on the (lo, hi) pair) plus one corner
     * explode + count — all hash exchanges on node/pair keys. */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+  def triangleCounts(edges: DataFrame, srcCol: String,
+                     dstCol: String): DataFrame = Trace.scope("graphs.triangles") {
     // Both normalization products are CUT to checkpoint leaves because the
     // downstream plan fans out over them: `und` feeds the degree count
     // (twice, via the unionAll) and the orientation join, and `ranked`
@@ -400,7 +402,7 @@ object Graphs {
     * [[graft.core.Checkpoints.cut]] so `rounds` iterations never stack
     * one plan. */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-                k: Int, rounds: Int): DataFrame = {
+                k: Int, rounds: Int): DataFrame = Trace.scope("graphs.kcore") {
     require(k >= 1 && rounds >= 1, s"need k>=1, rounds>=1: $k/$rounds")
     // Edge count rides each checkpoint's own action as an observed
     // metric (the round-12 connectedComponents fold): edges are only

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -175,7 +176,7 @@ object Linkage {
     * join; no driver materialization; the quadratic residue bucket holds
     * only near-empty strings. */
   def editDistanceSelfJoin(df: DataFrame, idCol: String, strCol: String,
-                           maxDist: Int): DataFrame = {
+                           maxDist: Int): DataFrame = Trace.scope("linkage.edit_distance") {
     require(maxDist >= 1, "maxDist must be >= 1")
     val tau = maxDist
     val m = tau + 1 // segments per indexed string

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,7 +100,8 @@ object Merge {
     * allowed and dropped from the result). */
   def applyChangelog(base: DataFrame, log: DataFrame, keys: Seq[String],
                      ordCols: Seq[String],
-                     deletePred: org.apache.spark.sql.Column): DataFrame = {
+                     deletePred: org.apache.spark.sql.Column
+                    ): DataFrame = Trace.scope("merge.apply_changelog") {
     require(keys.nonEmpty, "applyChangelog needs at least one key column")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
@@ -233,7 +235,8 @@ object Merge {
     * AQE broadcasts them when small; a forced broadcast would OOM on a
     * large erasure backlog. */
   def targetedDelete(spark: org.apache.spark.sql.SparkSession, path: String,
-                     keyCol: String, victims: DataFrame): DataFrame = {
+                     keyCol: String,
+                     victims: DataFrame): DataFrame = Trace.scope("merge.targeted_delete") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     val target = new Path(path)
@@ -281,7 +284,8 @@ object Merge {
     * rows_moved). Idempotent: a second run finds nothing under the
     * threshold (newly written files exceed it) and does zero work. */
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession, path: String,
-                        smallBytes: Long, targetBytes: Long): DataFrame = {
+                        smallBytes: Long, targetBytes: Long
+                       ): DataFrame = Trace.scope("merge.compact_small_files") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     require(smallBytes <= targetBytes, "small threshold above target size")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -23,7 +24,7 @@ object Packing {
   /** Adds `bin_id` (long) to `df`. `tokensCol` is cast to long, nulls
     * count 0; ordering (and therefore binning) is by `idCol` ascending. */
   def packBins(df: DataFrame, idCol: String, tokensCol: String,
-               budget: Long, numPartitions: Int = 0): DataFrame = {
+               budget: Long, numPartitions: Int = 0): DataFrame = Trace.scope("packing.bins") {
     require(budget > 0, s"budget $budget must be positive")
     val spark = df.sparkSession
     val nPart = if (numPartitions > 0) numPartitions

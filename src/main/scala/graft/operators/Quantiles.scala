@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -63,7 +64,7 @@ object Quantiles {
     * and the oracle compare is bit-exact); empty/all-null input → NaNs,
     * preserving the old contract. */
   def exactQuantiles(df: DataFrame, valueCol: String,
-                     ps: Seq[Double]): Seq[Double] = {
+                     ps: Seq[Double]): Seq[Double] = Trace.scope("quantiles.exact") {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       s"fractions must be in [0,1]: $ps")
     val names = ps.indices.map(i => s"__q$i")
@@ -252,6 +253,24 @@ object Quantiles {
     * stays small enough to partial-aggregate map-side. */
   private val bucketBits = 20
 
+  /** [[madOutliers]] stage 1: money → exact half-cent integers. */
+  private def madCents(df: DataFrame, groupCol: String,
+                       valueCol: String): DataFrame =
+    df.select(col(groupCol),
+      (round(col(valueCol) * 100).cast("long") * 2).as("c2"))
+
+  /** [[madOutliers]] stage 2: per-group exact median of c2, broadcast-
+    * joined back, absolute deviations stamped. */
+  private def madDeviations(c2: DataFrame, groupCol: String): DataFrame = {
+    val med = exactGroupQuantiles(c2, groupCol, "c2", Seq(0.5), Seq("med2"))
+    c2.join(broadcast(med), groupCol)
+      .withColumn("dev2", abs(col("c2").cast("double") - col("med2")))
+  }
+
+  /** [[madOutliers]] stage 3: per-group exact median of the deviations. */
+  private def madScale(dev: DataFrame, groupCol: String): DataFrame =
+    exactGroupQuantiles(dev, groupCol, "dev2", Seq(0.5), Seq("mad2"))
+
   /** Robust per-group outlier screen: median + MAD (median absolute
     * deviation), the estimator that survives the contamination that
     * wrecks mean/stddev screens — one fat-finger 1e9 row shifts a
@@ -273,27 +292,6 @@ object Quantiles {
     * value buffer); the group-sized median/MAD tables broadcast back;
     * the data crosses the group-key exchange twice (once per ranking
     * pass) and nothing else. */
-  /** [[madOutliers]] stage 1: money → exact half-cent integers. Package-
-    * private so the Probes phase rig times the operator's OWN stages
-    * rather than an inline re-spelling that could desynchronize. */
-  private[graft] def madCents(df: DataFrame, groupCol: String,
-                              valueCol: String): DataFrame =
-    df.select(col(groupCol),
-      (round(col(valueCol) * 100).cast("long") * 2).as("c2"))
-
-  /** [[madOutliers]] stage 2: per-group exact median of c2, broadcast-
-    * joined back, absolute deviations stamped. */
-  private[graft] def madDeviations(c2: DataFrame,
-                                   groupCol: String): DataFrame = {
-    val med = exactGroupQuantiles(c2, groupCol, "c2", Seq(0.5), Seq("med2"))
-    c2.join(broadcast(med), groupCol)
-      .withColumn("dev2", abs(col("c2").cast("double") - col("med2")))
-  }
-
-  /** [[madOutliers]] stage 3: per-group exact median of the deviations. */
-  private[graft] def madScale(dev: DataFrame, groupCol: String): DataFrame =
-    exactGroupQuantiles(dev, groupCol, "dev2", Seq(0.5), Seq("mad2"))
-
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
                   k: Double = 3.0): DataFrame = {
     // deliberately NOT materialized (the Layout curveQualityMulti

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -239,8 +240,8 @@ object Similarity {
     * apply distributed). The trained codebook (k×dim doubles) is embedded
     * as a literal in the distributed assignment expression. */
   def trainCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                     nCentroids: Int, iters: Int = 3,
-                     sampleSize: Int = 2048): Array[Seq[Double]] = {
+                     nCentroids: Int, iters: Int = 3, sampleSize: Int = 2048
+                    ): Array[Seq[Double]] = Trace.scope("similarity.train_centroids") {
     val sample: Array[(Long, Array[Double])] = corpus
       .select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))
@@ -338,7 +339,7 @@ object Similarity {
     * that is itself oracle-checkable ([[trainCentroids]] remains the
     * quality path). */
   def sampledCodebook(corpus: DataFrame, idCol: String, vecCol: String,
-                      n: Int): Array[Seq[Double]] = {
+                      n: Int): Array[Seq[Double]] = Trace.scope("similarity.sampled_codebook") {
     val rows = corpus
       .select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,14 +95,6 @@ object Sketches {
           .otherwise(col("raw")), 4))
       .select((groupCols.map(col) :+ col("est_distinct")) ++ extraCols.map(col): _*)
   }
-
-  def hllEstimate(regs: DataFrame, groupCols: Seq[String]): DataFrame =
-    estimateFromGrouped(
-      regs.groupBy(groupCols.map(col): _*)
-        .agg(
-          sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${RemBits + 1} - rho)")).as("s_present"),
-          count(lit(1)).as("n_present")),
-      groupCols, Nil)
 
   /** Estimate + register digest from a register frame in ONE aggregation
     * pass — one scan, and safe on sources that cannot be self-joined
@@ -385,7 +378,8 @@ object Sketches {
 
   private def probeLiteralWith(words: DataFrame, probes: DataFrame,
                                numHashes: Int, hexChars: Int,
-                               posOf: Int => Column): DataFrame = {
+                               posOf: Int => Column
+                              ): DataFrame = Trace.scope("sketches.bloom_probe_literal") {
     // filter words: position domain 4·hexChars bits, 32 bits per word —
     // 2048 longs at the default, 32k longs (256 KB literal) at hexChars=5;
     // bounded by the FILTER SIZE constant either way, never the data

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,8 @@ object Skew {
     * between plain join, AQE skew split, and salting. One partial-agg
     * shuffle over key counts (vocabulary-sized), a broadcast single-row
     * total, and a TakeOrdered top-k (no global sort materialization). */
-  def heavyHitters(df: DataFrame, keyCol: String, k: Int): DataFrame = {
+  def heavyHitters(df: DataFrame, keyCol: String,
+                   k: Int): DataFrame = Trace.scope("skew.heavy_hitters") {
     // one scan: the vocabulary-sized counts checkpoint (tiny), and the
     // total derives from them — never a second pass over the fact table
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -83,9 +84,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht"),
     "fr" -> Seq("le", "les", "est", "dans", "que", "pour"),
     "es" -> Seq("el", "los", "una", "por", "para", "del"))
-
-  private def stopwordHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(x => x: Any): _*)))
 
   /** Multi-language n-gram/stopword heuristic language ID:
     * CJK char ratio > 0.2 → 'zh'; else argmax of per-language stopword hits
@@ -199,7 +197,8 @@ object TextAnalysis {
     * so the only wide exchange carries (doc_id, token, tf) triples; the
     * per-doc top-k window repartitions by doc_id. */
   def topTermsPerDoc(df: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, k: Int): org.apache.spark.sql.DataFrame = {
+                     textCol: String, k: Int
+                    ): org.apache.spark.sql.DataFrame = Trace.scope("text.top_terms") {
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol),
         explode(filter(split(lower(trim(col(textCol))), "\\s+"), t => t =!= ""))
@@ -727,7 +726,7 @@ object TextAnalysis {
     * 8 chained replaces would otherwise stack one plan); every round's
     * exchange carries (pair, freq) rows bounded by |vocab|·avg_len. */
   def bpeMerges(df: org.apache.spark.sql.DataFrame, textCol: String,
-                nMerges: Int): org.apache.spark.sql.DataFrame = {
+                nMerges: Int): org.apache.spark.sql.DataFrame = Trace.scope("text.bpe_merges") {
     require(nMerges >= 1, s"nMerges must be >= 1: $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
@@ -820,7 +819,8 @@ object TextAnalysis {
     * (step, round, left, right, merged, pair_freq, symbols_after). */
   def bpeMergesBatched(df: org.apache.spark.sql.DataFrame, textCol: String,
                        nMerges: Int, batch: Int,
-                       candWindow: Int = 0): org.apache.spark.sql.DataFrame = {
+                       candWindow: Int = 0
+                      ): org.apache.spark.sql.DataFrame = Trace.scope("text.bpe_merges_batched") {
     require(nMerges >= 1, s"nMerges must be >= 1: $nMerges")
     require(batch >= 1, s"batch must be >= 1: $batch")
     val wnd = if (candWindow > 0) candWindow else batch * 8

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -170,7 +171,7 @@ object Validation {
     * broadcast back. */
   def psiByGroup(counts: DataFrame, grpCols: Seq[String],
                  baseCols: Seq[String], binCol: String, cntCol: String,
-                 bins: Int): DataFrame = {
+                 bins: Int): DataFrame = Trace.scope("validation.psi_by_group") {
     require(bins > 0, s"bins must be positive: $bins")
     require(baseCols.toSet.subsetOf(grpCols.toSet),
       s"baseCols $baseCols must be a subset of grpCols $grpCols")

@@ -453,9 +453,7 @@ object EventsStream {
           val keys = Seq("user_id")
           val ord = Seq("ts", "event_id")
           val del = col("event_type") === "error"
-          val existing =
-            try Some(ss.read.parquet(targetPath))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
+          val existing = snapshot(ss, targetPath)
           // first batch applies onto an empty snapshot (NOT a tombstone-
           // dropping compaction — ghosts must survive from batch one)
           val merged = Merge.applyChangelogVersioned(
@@ -477,6 +475,19 @@ object EventsStream {
     q.awaitTermination()
   }
 
+  /** The parquet snapshot at `path` (narrowed by `select`), or None
+    * before the first batch has written one. "Not there yet" is an
+    * existence check: a read of a missing path logs a warning with a
+    * stack trace before it fails. A path that exists but does not read
+    * or narrow as a snapshot (an empty dir) also counts as none. */
+  private def snapshot(ss: SparkSession, path: String,
+                       select: DataFrame => DataFrame = identity): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(ss.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(select(ss.read.parquet(path)))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
+  }
+
   def streamingUpsert(spark: SparkSession, dir: String, targetPath: String): Unit = {
     import graft.operators.Merge
     val events = eventsStream(spark, dir)
@@ -490,10 +501,8 @@ object EventsStream {
         try {
           val dates = b.select("event_date").distinct().collect()
             .map(_.getAs[java.sql.Date](0))
-          val existing =
-            try Some(ss.read.parquet(targetPath)
-              .where(col("event_date").isin(dates.toSeq: _*)))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
+          val existing = snapshot(ss, targetPath,
+            _.where(col("event_date").isin(dates.toSeq: _*)))
           val merged = existing match {
             case Some(e) => Merge.upsert(e, b, Seq("event_id"))
             case None    => b

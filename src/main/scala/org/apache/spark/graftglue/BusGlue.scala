@@ -6,13 +6,13 @@ import org.apache.spark.SparkContext
   * `ColumnGlue`: lives in the org.apache.spark package tree solely to
   * satisfy the access qualifier; nothing in Spark is modified.
   *
-  * Why: measurement rigs that consume StreamingQueryListener events must
-  * not read their buffer until the async bus has delivered the tail —
-  * Probes.streamFloor used a fixed 500 ms sleep, which on a loaded host
-  * can drop the FINAL batch's progress event from the triggerExecution
-  * sum and overstate the very overhead the probe measures (round-13
-  * ADVICE). `waitUntilEmpty` is exact: it returns when every queued
-  * event has been dispatched to every listener. */
+  * Why: a probe that reads what its listeners collected (stage metrics,
+  * executed plans, streaming progress) must not read it until the async
+  * bus has delivered the tail. A fixed sleep or a "count stopped
+  * changing" poll can drop the last events on a loaded host — the final
+  * micro-batch's progress, say, which overstates the very overhead
+  * `Probes streamfloor` measures. `waitUntilEmpty` is exact: it returns
+  * when every queued event has been dispatched to every listener. */
 object BusGlue {
   /** Block until the shared LiveListenerBus queue is fully dispatched,
     * or `timeoutMs` elapses (throws on timeout, like the internal API). */

@@ -581,4 +581,46 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(live2 == Set((1L, 150L), (3L, 300L), (4L, 500L)))
   }
+
+  /** WARN-or-worse log events that carry a stack trace, emitted while
+    * `body` runs: what an expected condition must never print. */
+  private def stackTracesLogged(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-trace-count", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThrown != null)
+          seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body finally { root.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("first CDC and upsert batches find no snapshot without logging a stack trace") {
+    val base = java.nio.file.Files.createTempDirectory("graft_nosnap").toString
+    val users = Tables.events(spark, sfDir).select("user_id").distinct().count()
+    val nEvents = Tables.events(spark, sfDir).count()
+    val cdcTraces = stackTracesLogged(
+      EventsStream.streamCdcApply(spark, sfDir, s"$base/cdc"))
+    val upsertTraces = stackTracesLogged(
+      EventsStream.streamingUpsert(spark, sfDir, s"$base/upsert"))
+    assert(cdcTraces.isEmpty, cdcTraces.mkString("\n"))
+    assert(upsertTraces.isEmpty, upsertTraces.mkString("\n"))
+    // one row per key (live or ghost), every event upserted once
+    assert(spark.read.parquet(s"$base/cdc").count() == users)
+    assert(spark.read.parquet(s"$base/upsert").count() == nEvents)
+    // a target that exists but holds no parquet still reads as "no
+    // snapshot yet", as before the existence check
+    new java.io.File(s"$base/cdc_empty").mkdirs()
+    EventsStream.streamCdcApply(spark, sfDir, s"$base/cdc_empty")
+    assert(spark.read.parquet(s"$base/cdc_empty").count() == users)
+  }
 }
